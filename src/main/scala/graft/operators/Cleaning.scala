@@ -20,12 +20,14 @@ object Cleaning {
    * valid values (reference dag.py:79-81 and 122-127: zero/null
    * `ano_fabricacao_veiculo`, `pessoas`, `veiculos` → median).
    *
-   * Scale posture: the median is a single scalar computed by one exact
-   * `median` aggregation, attached back via a broadcast cross-join of a
-   * 1-row frame — no driver collect in the plan, no re-computation per row.
-   * For 100 TB columns where an exact median's full sort is too expensive,
-   * pass `approx = true` to use `percentile_approx` (Greenwald-Khanna sketch, one pass,
-   * mergeable across partitions).
+   * Scale posture: the median is a single scalar attached back via a
+   * broadcast cross-join of a 1-row frame — no driver collect in the
+   * plan, no re-computation per row. The exact path is picked by input
+   * size (see [[imputeWithMedians]]): one lazy `median` aggregate below
+   * the leaf-row gate, bounded-memory sort-rank selection above it.
+   * `approx = true` always takes `percentile_approx` (Greenwald-Khanna
+   * sketch, one pass, mergeable across partitions) for monitoring-grade
+   * imputation at any size.
    */
   def imputeWithMedian(df: DataFrame, column: String, valid: Column, approx: Boolean = false): DataFrame =
     imputeWithMedians(df, Seq(column -> valid), approx)
@@ -33,34 +35,44 @@ object Cleaning {
   /**
    * Median imputation of N columns (the reference imputes THREE columns
    * back to back, dag.py:79-81,122-127), all medians broadcast back as
-   * one combined 1-row bounds frame. The exact path ranks each column's
-   * valid subset by sort-rank selection ([[Features.groupQuantiles]] —
-   * bounded memory at any value cardinality, one sort per column); the
-   * `approx = true` path keeps the single-pass one-aggregate shape
-   * (mergeable Greenwald-Khanna sketches for all N columns in one scan)
-   * for 100 TB monitoring-grade imputation.
+   * one combined 1-row bounds frame. The exact path is selected by the
+   * honest leaf-row estimate ([[RangeRank.manyLeafRows]]):
+   *
+   *  - below it, all N medians come from ONE lazy aggregate,
+   *    `median(when(valid, c))` per column (aggregates skip nulls, so
+   *    that is the median over the valid subset). Spark's `median`
+   *    buffers a value→count hash map whose keyless final merge holds
+   *    every distinct value on one executor — bounded here because the
+   *    input itself is below the gate (2 Mi estimated rows by default). Building the plan runs
+   *    no job: the aggregate executes once, inside the caller's action.
+   *  - above it, each column's valid subset is ranked by sort-rank
+   *    selection ([[Features.groupQuantiles]] — spill-bounded memory at
+   *    any value cardinality, one sort per column; imputed columns are
+   *    price-like, i.e. high-cardinality).
+   *
+   * Both exact paths read the same values at the same ranks with the
+   * same interpolation, so they are bit-identical (CleaningSpec pins
+   * it). `approx = true` keeps the one-aggregate shape with mergeable
+   * Greenwald-Khanna sketches for 100 TB monitoring-grade imputation.
    */
   def imputeWithMedians(df: DataFrame, columns: Seq[(String, Column)],
       approx: Boolean = false): DataFrame = {
     require(columns.nonEmpty, "imputeWithMedians needs at least one column")
-    // approx: all medians in ONE single-pass aggregate (mergeable GK
-    // sketches). exact: one sort-rank frame per column
-    // (Features.groupQuantiles' keyless range-partition path — `median`
-    // shares `percentile`'s value→count hash-map buffer, whose keyless
-    // final merge gathers EVERY distinct value on one executor; imputed
-    // columns are price-like, i.e. high-cardinality). Each frame is one
-    // row; the crossJoin chain broadcasts them all back in one go.
+    // one row of N medians either way, broadcast back in one go
     val meds =
-      if (approx) {
+      if (!approx && RangeRank.manyLeafRows(df)) columns.zipWithIndex.map {
+        case ((c, valid), i) =>
+          Features.groupQuantiles(df.filter(valid), Nil, c,
+            Seq(0.5 -> s"__graft_med_$i"))
+      }.reduce(_ crossJoin _)
+      else {
         val stats = columns.zipWithIndex.map { case ((c, valid), i) =>
-          percentile_approx(when(valid, col(c)), lit(0.5), lit(10000))
+          val v = when(valid, col(c))
+          (if (approx) percentile_approx(v, lit(0.5), lit(10000)) else median(v))
             .cast("double").as(s"__graft_med_$i")
         }
         df.agg(stats.head, stats.tail: _*)
-      } else columns.zipWithIndex.map { case ((c, valid), i) =>
-        Features.groupQuantiles(df.filter(valid), Nil, c,
-          Seq(0.5 -> s"__graft_med_$i"))
-      }.reduce(_ crossJoin _)
+      }
     columns.zipWithIndex.foldLeft(df.crossJoin(broadcast(meds))) {
       case (acc, ((c, valid), i)) =>
         acc.withColumn(c, when(valid, col(c)).otherwise(col(s"__graft_med_$i")))

@@ -351,9 +351,10 @@ object Dedup {
       "threshold num/den must sit in (0, 1]")
     // the shingle/tokenize expression is the per-row hot cost: explode
     // ONCE; the vocabulary aggregate and the id join back both shuffle
-    // the exploded frame by token, so AQE plans the second as a
-    // ReusedExchange — the tokenizer still runs once, unpersisted
-    // (a persist of the tokenized frame was tried and reverted: it
+    // the exploded frame by token, so below the bigCorpus gate AQE plans
+    // the second as a ReusedExchange — the tokenizer runs once,
+    // unpersisted; above it see the join below. (A persist of the
+    // tokenized frame was tried and reverted: it
     // halved this query but poisoned every LATER query in the same
     // session with order-dependent 2-5x slowdowns — plan-fragment
     // caches are session state).
@@ -379,11 +380,15 @@ object Dedup {
       else RangeRank.ranked(vocab, Nil, "__gdf",
         tieBreak = Seq("__gt"), rnAs = "__gtid"))
       .select(col("__gt"), col("__gtid"))
-    // shuffle_hash (not broadcast): with both sides hashed on __gt the
-    // exploded frame's exchange is the SAME subplan the vocabulary
-    // aggregate shuffled, so AQE plans it as a ReusedExchange and the
-    // tokenizer runs ONCE — a broadcast of the tiny vocab would skip
-    // the toks exchange and re-evaluate the explode per branch
+    // shuffle_hash (not broadcast): on the small-corpus ranked path,
+    // with both sides hashed on __gt the exploded frame's exchange is
+    // the SAME subplan the vocabulary aggregate shuffled, so AQE plans
+    // it as a ReusedExchange and the tokenizer runs ONCE — a broadcast
+    // of the tiny vocab would skip the toks exchange and re-evaluate
+    // the explode per branch. On the bigCorpus path orderIsoId
+    // materializes the vocabulary in its own action, and exchange
+    // reuse does not span actions: this join pays a second tokenizer
+    // pass (the accepted trade for the distributed id at sf10).
     var ordered = toks.join(rankedVocab.hint("shuffle_hash"), "__gt")
       .groupBy(col("__gid"))
       .agg(sort_array(collect_list(col("__gtid"))).as("__gsorted"))

@@ -127,9 +127,13 @@ object Features {
     // The persist (and the shrink probe below) key on the LEAF-rows
     // clause alone, not the full gate: the byte clause false-fires on
     // join-derived frames whose sizeInBytes estimate multiplied through
-    // the join (q236's 60-row theil-sen pairs estimate gigabytes) —
-    // harmless for picking the value-aggregated plan SHAPE, a pure
-    // regression if it triggers materialization work on a tiny frame.
+    // the join (q236's 60-row theil-sen pairs estimate gigabytes). It
+    // still picks the value-aggregated plan SHAPE below, and that is
+    // NOT harmless: ranked()'s boundary probe then runs an eager head()
+    // over the whole upstream (two median imputations on a 20 000-row
+    // join-derived ETL frame: 23 jobs, 6.25 s on 4 cores at plan build — see
+    // RangeRank.manyLeafRows); keying the persist on it too would add
+    // a cache write of a tiny frame on top.
     // NOTE: above the gate, merely CONSTRUCTING this plan runs a full
     // materialization job — the shrink probe's head() below writes the
     // MEMORY_AND_DISK cache of this fact-sized projection. That is the

@@ -112,17 +112,21 @@ object Sources {
    * lazy CSV scan (it would have to re-parse, and the re-parse could
    * disagree), and the persist also means the file is parsed once for
    * both outputs. Callers unpersist when done with both frames.
+   * `encoding` decodes good rows and quarantined raw lines alike (the
+   * reference feed is latin1; see [[csv]]).
    */
   def csvQuarantine(
       spark: SparkSession,
       path: String,
       schema: StructType,
       sep: String = ",",
+      encoding: String = "UTF-8",
       header: Boolean = false): QuarantinedCsv = {
     val corrupt = "_corrupt_record"
     val withCorrupt = schema.add(corrupt, org.apache.spark.sql.types.StringType)
     val parsed = spark.read
       .option("sep", sep)
+      .option("encoding", encoding)
       .option("header", header.toString)
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", corrupt)

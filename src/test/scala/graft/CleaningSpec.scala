@@ -1,8 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.Cleaning
+import graft.operators.{Cleaning, RangeRank}
 
 class CleaningSpec extends SparkSpec {
   import spark.implicits._
@@ -33,16 +34,75 @@ class CleaningSpec extends SparkSpec {
     val seq2 = Cleaning.imputeWithMedian(
       Cleaning.imputeWithMedian(d2, "a", col("a") > 0), "b", col("b") > 0)
     assert(both.orderBy("id").collect().toSeq == seq2.orderBy("id").collect().toSeq)
-    // the one-pass (single aggregate, N sketches) shape is the APPROX
-    // path's contract; the exact path pays one sort-rank frame per
-    // column for bounded memory (groupQuantiles doc)
+    // below the leaf-row gate both the exact and the approx path are one
+    // aggregate over one scan for all N columns, plus the imputed scan
     val approx = Cleaning.imputeWithMedians(d2,
       Seq("a" -> (col("a") > 0), "b" -> (col("b") > 0)), approx = true)
-    val scans = approx.queryExecution.executedPlan.toString()
-      .linesIterator.count(_.contains("LocalTableScan"))
-    assert(scans == 2, s"expected 2 scans in the approx plan, had $scans")
+    for ((name, out) <- Seq("exact" -> both, "approx" -> approx)) {
+      val scans = out.queryExecution.executedPlan.toString()
+        .linesIterator.count(_.contains("LocalTableScan"))
+      assert(scans == 2, s"expected 2 scans in the $name plan, had $scans")
+    }
     assert(approx.orderBy("id").select("id", "a").as[(Long, Double)].collect()
       .toSeq == Seq(1L -> 10.0, 2L -> 20.0, 3L -> 30.0, 4L -> 20.0, 5L -> 20.0))
+  }
+
+  /** Runs `body` with the rank row gate at 0, so every frame counts as
+   *  large and the exact median takes the per-column groupQuantiles path. */
+  private def aboveRowGate[T](body: => T): T = {
+    spark.conf.set("graft.rank.rangeRows", "0")
+    try body finally spark.conf.unset("graft.rank.rangeRows")
+  }
+
+  test("imputeWithMedians builds a join-derived plan without running a job") {
+    val left = (1 to 2000).map(i => (i.toLong, (i % 97).toDouble)).toDF("id", "a")
+    val right = (1 to 2000).map(i => (i.toLong, (i % 89 - 5).toDouble)).toDF("id", "b")
+    val df = left.join(right, "id")
+    // without CBO the join's byte estimate multiplies its children, so
+    // the rank gate's byte clause fires on this 2000-row frame
+    assert(RangeRank.useBucketed(df))
+    val cols = Seq("a" -> (col("a") > 0), "b" -> (col("b") > 0))
+    var out: DataFrame = null
+    assert(jobsDuring { out = Cleaning.imputeWithMedians(df, cols) } == 0)
+    assert(!out.queryExecution.executedPlan.toString().contains("__qv"))
+    // the per-column sort-rank path above the gate probes eagerly, which
+    // also shows the counter sees plan-build jobs
+    var forced: DataFrame = null
+    val probeJobs = aboveRowGate(jobsDuring {
+      forced = Cleaning.imputeWithMedians(df, cols)
+    })
+    assert(probeJobs > 0)
+    assert(forced.queryExecution.executedPlan.toString().contains("__qv"))
+    assert(out.orderBy("id").collect().toSeq == forced.orderBy("id").collect().toSeq)
+  }
+
+  test("exact median aggregate is bit-equal to the groupQuantiles path") {
+    val rnd = new scala.util.Random(7)
+    // odd: 1001 valid values; even: 1000 (the median interpolates);
+    // none: no valid value, so its median and imputed values are null.
+    // Every column also carries nulls and invalid values.
+    val df = (0 until 1200).map { i =>
+      val odd = if (i < 1001) Some(rnd.nextGaussian() * 1e3)
+        else if (i % 2 == 0) None else Some(-1e9)
+      val even = if (i < 1000) Some(1.5 + rnd.nextDouble() * 97.3)
+        else if (i % 3 == 0) None else Some(0.0)
+      val none = if (i % 2 == 0) None else Some(-1.0 - i)
+      (i.toLong, odd, even, none)
+    }.toDF("id", "odd", "even", "none")
+    val cols = Seq(
+      "odd" -> (col("odd") > -1e8),
+      "even" -> (col("even") > 1.0),
+      "none" -> (col("none") > 0.0))
+    val bits = (rs: Array[org.apache.spark.sql.Row]) => rs.toSeq.map(r =>
+      r.getLong(0) +: (1 to 3).map(i =>
+        if (r.isNullAt(i)) None else Some(java.lang.Double.doubleToRawLongBits(r.getDouble(i)))))
+    val small = Cleaning.imputeWithMedians(df, cols).orderBy("id").collect()
+    val ranked = aboveRowGate(Cleaning.imputeWithMedians(df, cols).orderBy("id").collect())
+    assert(bits(small) == bits(ranked))
+    assert(small.forall(_.isNullAt(3)))
+    // invalid rows took the median; valid rows kept their value
+    assert(small.drop(1001).map(_.getDouble(1)).distinct.length == 1)
+    assert(small.drop(1000).map(_.getDouble(2)).distinct.length == 1)
   }
 
   test("fillSentinel fills nulls by default and custom-invalid when given") {

@@ -208,6 +208,29 @@ class SourcesSpec extends SparkSpec {
     } finally q.release()
   }
 
+  test("csvQuarantine decodes latin1 in good rows and in the quarantined raw line") {
+    import org.apache.spark.sql.types._
+    val dir = Files.createTempDirectory("graft_csv_q1")
+    val f = dir.resolve("feed.csv")
+    // the reference feed's dialect: ';'-separated latin1 with a header
+    Files.write(f,
+      ("id;municipio;valor\n" +
+        "1;São Paulo;10.5\n" +
+        "2;Brasília;oops\n" +   // bad double
+        "3;Goiânia;7.25\n"
+        ).getBytes(Charset.forName("ISO-8859-1")))
+    val schema = StructType(Seq(
+      StructField("id", LongType), StructField("municipio", StringType),
+      StructField("valor", DoubleType)))
+    val q = Sources.csvQuarantine(spark, f.toString, schema, sep = ";",
+      encoding = "ISO-8859-1", header = true)
+    try {
+      val g = q.good.collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
+      assert(g == Set((1L, "São Paulo", 10.5), (3L, "Goiânia", 7.25)))
+      assert(q.quarantined.collect().map(_.getString(0)).toSeq == Seq("2;Brasília;oops"))
+    } finally q.release()
+  }
+
   test("multimodal decode keeps ids, is deterministic, and sizes match payloads") {
     val docs = Tables(spark, sf0001).documents.limit(50)
     val payloads = Multimodal.attachPayload(docs, "text", "doc_id")
