@@ -4,12 +4,15 @@ import org.apache.spark.scheduler._
 import scala.collection.mutable
 
 /**
- * Per-job breakdown of one query (or shared-pair group): runs it through
- * the noop sink like [[Bench]], with a listener that records every Spark
- * job's wall time, stage/task counts and call site. The "where do the
- * seconds go" companion to [[Time]] — a 13 s query that is 14 jobs of
- * 0.9 s is an iteration-overhead problem, not a data-volume problem, and
- * the call sites say which operator line each job belongs to.
+ * The per-query timing main: runs one query (or shared-pair group)
+ * `reps` times against `SPARK_GRAFT_SF_DIR` (default sf0.1) through the
+ * noop sink like [[Bench]], and prints each rep's wall time with a
+ * per-job breakdown from a listener that records every Spark job's wall
+ * time, stage/task counts and call site — a 13 s query that is 14 jobs
+ * of 0.9 s is an iteration-overhead problem, not a data-volume problem,
+ * and the call sites say which operator line each job belongs to. A rep
+ * that ran connectedComponents also prints its loop telemetry (rounds,
+ * initial edges, contracted and frozen counts, resolve rounds).
  *
  * Usage: runMain graft.Profile <query|group> [reps]   (reps default 2 —
  * read the LAST rep; the first pays page-cache and JIT warm-up)
@@ -66,6 +69,7 @@ object Profile {
     (1 to reps).foreach { i =>
       jobs.synchronized(jobs.clear())
       stages.synchronized(stages.clear())
+      operators.Dedup.lastCcRounds = -1
       val t0 = System.nanoTime()
       run()
       val sec = (System.nanoTime() - t0) / 1e9
@@ -75,6 +79,12 @@ object Profile {
       val jobSum = js.map(j => (j.end - j.start) / 1000.0).sum
       println(f"[profile] $name rep $i: total $sec%.3f s, " +
         f"jobs=${js.size} (sum $jobSum%.3f s, driver gap ${sec - jobSum}%.3f s)")
+      if (operators.Dedup.lastCcRounds >= 0)
+        println(s"[profile]   cc rounds=${operators.Dedup.lastCcRounds} " +
+          s"edges0=${operators.Dedup.lastCcInitialEdges} " +
+          s"contracted=${operators.Dedup.lastCcEdgeCounts.mkString(",")} " +
+          s"frozen=${operators.Dedup.lastCcFrozenCounts.mkString(",")} " +
+          s"resolveRounds=${operators.Dedup.lastCcResolveRounds}")
       js.foreach { j =>
         println(f"[profile]   job ${j.id}%3d ${(j.end - j.start) / 1000.0}%8.3f s " +
           f"stages=${j.stages}%2d tasks=${j.tasks}%5d  ${j.desc.take(100)}")

@@ -1,13 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /**
  * Shared local-session builder for the driver-contract mains
- * (Verify / Bench / Time / Explain): one place for the master, shuffle
+ * (Verify / Bench / Profile / Explain): one place for the master, shuffle
  * parallelism, AQE, UTC, UI, and catalog-required confs — so a
- * single-query timing (Time) always measures exactly the session Bench
- * benchmarks, and a new required conf lands everywhere at once.
+ * single-query profile always measures exactly the session Bench
+ * benchmarks, and a new required conf lands everywhere at once. Also the
+ * one home of the library's knobs ([[knob]]) and of the iterative-loop
+ * regime ([[withLoop]]).
  */
 object Sessions {
 
@@ -31,7 +34,7 @@ object Sessions {
    * wider; a real cluster would scale the bound by executor count).
    * At sf0.1 (~15 MB) this is exactly `cpus` — the pre-widening plan —
    * and at sf10 (~1.5 GB) it is ~192, inside the envelope that fixed
-   * the aborts. `SPARK_GRAFT_INIT_PARTITIONS` overrides for A/B work.
+   * the aborts.
    */
   def initialPartitions(cpus: Int, inputBytes: Long): Int = {
     val byData = (inputBytes / (8L << 20)).toInt
@@ -47,88 +50,99 @@ object Sessions {
     if (f.exists()) walk(f) else 0L
   }
 
-  /**
-   * Scoped AQE initial-partition override for ITERATIVE operators.
-   *
-   * The input-sized ceiling above is right for one-pass scan-heavy
-   * plans and WRONG inside iteration loops over small frames: a
-   * connected-components round at sf10 shuffles ~10⁵-10⁶-row label and
-   * edge frames through 3-4 exchanges, and each exchange pays the
-   * per-partition scheduling/block overhead at the INPUT-sized ceiling
-   * (192 at sf10) once per round — measured 39.8 s → 8.7 s on q62's
-   * 4-round loop when the ceiling is dropped to cores. This helper
-   * sizes the ceiling by the LOOP frame instead: one initial partition
-   * per ~1M loop rows (loop rows are narrow — two longs — so 1M rows
-   * ≈ 16-30 MB, Spark's advisory size), bounded [cores, 16× cores]
-   * like the input rule. The conf is restored on exit; everything the
-   * loop materializes (localCheckpoints) runs under the override, and
-   * the returned frame is a checkpoint scan that plans no shuffles, so
-   * the restore cannot race the result.
-   *
-   * Session-conf scoping caveat: Spark has no per-plan conf, so a
-   * CONCURRENT planner in the same session would see the override for
-   * the duration of `body` — the driver mains (Verify/Bench/TimeOne)
-   * are serial by construction.
-   */
-  def withLoopPartitions[T](spark: SparkSession, rows: Long)(body: => T): T =
-    withLoopPartitions(spark, rows, narrow = false)(body)
+  /** One tunable bar of the library: a `graft.*` session-conf key and
+   *  its default. The six values below are the only confs the library
+   *  reads; README's knob table lists each one's consumer and spec. */
+  final case class Knob(key: String, default: Long)
 
-  /** Static shuffle width for a NARROW loop (see below): one partition
-   *  per ~250k narrow loop rows, floored at 4 (a tiny loop frame needs
-   *  no more; the session default would pay ~cores tasks per exchange
-   *  per round), capped at 16× cores like every width rule here. */
-  def loopShufflePartitions(spark: SparkSession, rows: Long): Int =
-    math.min(math.max(4L, rows / 250000L),
-      spark.sparkContext.defaultParallelism * 16L).toInt
+  /** [[graft.operators.RangeRank.useBucketed]]'s byte clause. */
+  val RankRangeBytes = Knob("graft.rank.rangeBytes", 256L << 20)
+  /** [[graft.operators.RangeRank.manyLeafRows]]'s row clause (the
+   *  default's rationale sits there). */
+  val RankRangeRows = Knob("graft.rank.rangeRows", 2L << 20)
+  /** naiveBayes' dense-grid bar, in |vocab| × |classes| cells. */
+  val NbGridCells = Knob("graft.nb.gridCells", 1000000L)
+  /** The SSJoin-family verify-join hash-build bar, in leaf rows. */
+  val SsjoinHashRows = Knob("graft.ssjoin.hashRows", 400000L)
+  /** connectedComponents' edge-contraction bar, in directed edges. */
+  val CcContractMinEdges = Knob("graft.cc.contractMinEdges", 1000000L)
+  /** [[withLoop]]'s narrow/wide bar, in measured loop-frame rows. */
+  val LoopNarrowRows = Knob("graft.loop.narrowRows", 32000000L)
+
+  /** `k`'s value on this session: the conf when set, else the default. */
+  def knob(spark: SparkSession, k: Knob): Long =
+    spark.conf.getOption(k.key).flatMap(_.toLongOption).getOrElse(k.default)
+
+  /** What [[withLoop]] hands a loop body: the regime it picked and the
+   *  static shuffle width of a narrow loop. */
+  final class Loop private[Sessions] (val narrow: Boolean, val width: Int) {
+    /** A loop join's build side: SHUFFLE_HASH-hinted when narrow —
+     *  checkpoint-scan stats are unknown to the static planner, which
+     *  would otherwise sort-merge every loop join. */
+    def hinted(df: DataFrame): DataFrame =
+      if (narrow) df.hint("shuffle_hash") else df
+
+    /** The loop-layout copy of `df` when narrow: one hash(key) relayout
+     *  at the loop width, materialized by `keep` (a checkpoint roller),
+     *  so every round's join on `key` streams the kept layout with no
+     *  per-round exchange. Wide loops keep `df` as it is. */
+    def relaid(df: DataFrame, key: String)(keep: DataFrame => DataFrame): DataFrame =
+      if (narrow) keep(df.repartition(width, col(key))) else df
+  }
 
   /**
-   * `narrow = true` additionally pins the loop's execution regime for
-   * SMALL iteration frames (the caller gates on its measured loop row
-   * count): adaptive execution OFF and a static shuffle width from
-   * [[loopShufflePartitions]]. Rationale (round-14 profiling): under
-   * AQE every exchange of every round materializes as its OWN job with
-   * a replanning pass — a connected-components round was ~8 jobs of
-   * 10-100 ms orchestration over frames of a few MB. With AQE off the
-   * whole round is ONE statically-planned job; the loop frames are
-   * orders of magnitude below the sizes where AQE's coalescing/skew
-   * machinery earns its planning cost. Callers must pair this with
-   * explicit join-strategy hints: checkpoint-scan stats are unknown to
-   * the static planner, which would otherwise pick sort-merge for
-   * every loop join. `SPARK_GRAFT_LOOP_NARROW_OFF` disables the narrow
-   * regime for A/B runs (callers drop their relayout and hints on the
-   * same variable). The loop-width rule itself has no switch: its A/B
-   * concluded (q62 sf10 39.8 s → 8.7 s), and it always applies.
+   * The regime of an ITERATIVE operator (connectedComponents,
+   * pageRank), picked once from the loop frame's measured row count
+   * `rows` — one decision, no per-operator overrides.
+   *
+   * Every loop sizes the AQE initial-partition ceiling by the loop
+   * frame, not the input: one partition per ~1M loop rows (narrow rows,
+   * two longs, ≈ 16-30 MB), bounded [cores, 16× cores] like
+   * [[initialPartitions]]. At the input-sized ceiling every exchange of
+   * every round paid per-partition scheduling/block overhead (q62 at
+   * sf10: 39.8 s → 8.7 s on its 4-round loop).
+   *
+   * Below [[LoopNarrowRows]] (32 M) the loop is NARROW: adaptive
+   * execution off and a static shuffle width of one partition per
+   * ~250k loop rows, floored at 4 and capped at 16× cores. Under AQE
+   * every exchange of every round materializes as its own job with a
+   * replanning pass (a CC round was ~8 jobs of 10-100 ms orchestration
+   * over frames of a few MB); with AQE off a round is one statically
+   * planned job. The body gets the width and the matching hints and
+   * relayout through [[Loop]]. Measured at sf10, regime off vs on
+   * (bench/BENCH_CC_sf10_narrow{OFF,ON}_r14.json): q62 17.1 → 6.7 s,
+   * q98 19.6 → 14.7 s. At or above the bar the loop stays wide (AQE on),
+   * where runtime skew handling earns its planning cost.
+   *
+   * The overridden confs are restored when `body` returns or throws;
+   * everything the loop materializes (localCheckpoints) runs under the
+   * override, and the returned frame is a checkpoint scan that plans no
+   * shuffles, so the restore cannot race the result. Spark has no
+   * per-plan conf, so a CONCURRENT planner on the same session would see
+   * the override while `body` runs — the driver mains are serial.
    */
-  def withLoopPartitions[T](spark: SparkSession, rows: Long, narrow: Boolean)(body: => T): T = {
-    val key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+  def withLoop[T](spark: SparkSession, rows: Long)(body: Loop => T): T = {
     val cores = spark.sparkContext.defaultParallelism
-    val want = math.min(math.max(cores.toLong, rows / 1000000L), cores * 16L)
-    val doNarrow = narrow && !sys.env.contains("SPARK_GRAFT_LOOP_NARROW_OFF")
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val spKey = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.getOption(key)
-    val prevAqe = spark.conf.getOption(aqeKey)
-    val prevSp = spark.conf.getOption(spKey)
-    spark.conf.set(key, want.toString)
-    if (doNarrow) {
-      spark.conf.set(aqeKey, "false")
-      spark.conf.set(spKey, loopShufflePartitions(spark, rows).toString)
-    }
-    def restore(k: String, v: Option[String]): Unit = v match {
-      case Some(s) => spark.conf.set(k, s)
-      case None => spark.conf.unset(k)
-    }
-    try body
-    finally {
-      restore(key, prev)
-      if (doNarrow) { restore(aqeKey, prevAqe); restore(spKey, prevSp) }
+    val loop = new Loop(rows < knob(spark, LoopNarrowRows),
+      math.min(math.max(4L, rows / 250000L), cores * 16L).toInt)
+    val ceiling = math.min(math.max(cores.toLong, rows / 1000000L), cores * 16L)
+    val overrides =
+      Seq("spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> ceiling.toString) ++
+        (if (loop.narrow) Seq("spark.sql.adaptive.enabled" -> "false",
+          "spark.sql.shuffle.partitions" -> loop.width.toString) else Nil)
+    val set = spark.conf.getAll
+    val prev = overrides.map { case (k, _) => k -> set.get(k) }
+    overrides.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body(loop)
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
 
   def local(cpus: String, dataDir: Option[String] = None): SparkSession = {
     val n = cpus.toIntOption.getOrElse(32)
-    val init = sys.env.get("SPARK_GRAFT_INIT_PARTITIONS").flatMap(_.toIntOption)
-      .getOrElse(initialPartitions(n, dataDir.map(dirBytes).getOrElse(0L)))
+    val init = initialPartitions(n, dataDir.map(dirBytes).getOrElse(0L))
     graft.sources.Tables.configure(SparkSession.builder())
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

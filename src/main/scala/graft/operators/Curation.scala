@@ -1161,9 +1161,8 @@ object Curation {
     val fallback = classes.select(col("__gcls"),
       absorb(log(lit(1L).cast("double") /
         (col("__gT") + col("__gV")).cast("double"))).as("__gmiss"))
-    val gridBar = docs.sparkSession.conf.getOption("graft.nb.gridCells")
-      .flatMap(_.toLongOption).getOrElse(1000000L)
-    val scored = (if (gridCells <= gridBar) {
+    val scored = (if (
+        gridCells <= graft.Sessions.knob(docs.sparkSession, graft.Sessions.NbGridCells)) {
       // dense path: the full (class, token) term grid — seen where
       // trained, the class fallback elsewhere — broadcast against the
       // id-partitioned doc-token frame. The per-(doc, token) coalesce

@@ -333,16 +333,13 @@ object Dedup {
    * The SSJoin-family verify-join row gate, shared by
    * [[setSimilarityJoin]] and [[minHashEstimate]]: hash-build the
    * sets side of the verify joins once the input's honest leaf
-   * estimate clears the bar (400k rows; `graft.ssjoin.hashRows` /
-   * SPARK_GRAFT_SSJOIN_HASH_ROWS overrides). One definition so a
-   * future bar change cannot silently diverge the two verify stages.
+   * estimate clears the bar (400k rows; `graft.ssjoin.hashRows`
+   * overrides). One definition so a future bar change cannot silently
+   * diverge the two verify stages.
    */
-  private def ssjoinHashGate(df: DataFrame): Boolean = {
-    val bar = df.sparkSession.conf.getOption("graft.ssjoin.hashRows")
-      .orElse(sys.env.get("SPARK_GRAFT_SSJOIN_HASH_ROWS"))
-      .flatMap(_.toLongOption).getOrElse(400000L)
-    RangeRank.estLeafRows(df) >= BigInt(bar)
-  }
+  private def ssjoinHashGate(df: DataFrame): Boolean =
+    RangeRank.estLeafRows(df) >=
+      BigInt(graft.Sessions.knob(df.sparkSession, graft.Sessions.SsjoinHashRows))
 
   def setSimilarityJoin(
       df: DataFrame, idCol: String, tokensCol: Column,
@@ -459,12 +456,11 @@ object Dedup {
     // on these ~43-token arrays and was dropped.
     //
     // The gate is the SSJoin's OWN row bar (400k estimated leaf rows,
-    // `graft.ssjoin.hashRows` / SPARK_GRAFT_SSJOIN_HASH_ROWS to
-    // override), NOT the rank cutover's 2M: the verify stage's
-    // intermediate pair volume is a large multiple of the input rows,
-    // so it saturates a box long before a window sort would — sf10's
-    // 500k-doc corpus (leaf estimate ~1M) is already a 60 s spilling
-    // query while sitting under the rank bar.
+    // `graft.ssjoin.hashRows` to override), NOT the rank cutover's 2M:
+    // the verify stage's intermediate pair volume is a large multiple
+    // of the input rows, so it saturates a box long before a window
+    // sort would — sf10's 500k-doc corpus (leaf estimate ~1M) is
+    // already a 60 s spilling query while sitting under the rank bar.
     val bigVerify = bigCorpus
     def setsAs(as: String) = {
       val s = ordered.select(col("__gid"), col("__gsorted").as(as))
@@ -586,8 +582,7 @@ object Dedup {
    * round to round, and new minima still flow between groups via the
    * rewritten edges while member chains catch up through pointer
    * jumping. Contraction engages only above `graft.cc.contractMinEdges`
-   * directed edges (default 1,000,000, env
-   * `SPARK_GRAFT_CC_CONTRACT_MIN_EDGES`) AND only from round 2 onward:
+   * directed edges (default 1,000,000) AND only from round 2 onward:
    * on bench-scale graphs its fixed per-round cost (two relabel joins +
    * a distinct + a checkpoint) exceeds what re-shuffling a few thousand
    * edges costs, and near-dup cluster graphs (cliques/stars) converge
@@ -664,30 +659,7 @@ object Dedup {
       val r = df.agg(sum(col("label").cast("decimal(38,0)"))).head()
       if (r.isNullAt(0)) java.math.BigDecimal.ZERO else r.getDecimal(0)
     }
-    val contractMin: Long = spark.conf.getOption("graft.cc.contractMinEdges")
-      .orElse(sys.env.get("SPARK_GRAFT_CC_CONTRACT_MIN_EDGES"))
-      .flatMap(_.toLongOption).getOrElse(1000000L)
-    // NARROW-LOOP regime (round-14): below `graft.cc.loopAqeOffEdges`
-    // directed edges (default 32 M, env SPARK_GRAFT_CC_LOOP_AQE_OFF_EDGES)
-    // the loop runs with adaptive execution OFF at a static
-    // loop-row-sized shuffle width, every loop join carries an explicit
-    // SHUFFLE_HASH hint (checkpoint-scan stats are unknown to the
-    // static planner, which would otherwise sort-merge every round),
-    // and the edge frame is re-laid hash(src) at the loop width so the
-    // per-round propagate join reuses the cached layout with NO edge
-    // exchange. Measured at sf0.1 (min-of-3, same labels bit-for-bit):
-    // q62 3.1→1.7 s, q98 3.7→1.7 s — the per-round cost was ~8 AQE
-    // stage-materialization jobs of 10-100 ms orchestration each, not
-    // data. Above the bar everything keeps the round-13 AQE path
-    // (runtime skew handling matters once loop frames are cluster-
-    // sized); the bar is conf/env-overridable for A/B runs.
-    val aqeOffBar: Long = spark.conf.getOption("graft.cc.loopAqeOffEdges")
-      .orElse(sys.env.get("SPARK_GRAFT_CC_LOOP_AQE_OFF_EDGES"))
-      .flatMap(_.toLongOption).getOrElse(32000000L)
-    val smallLoop = edgeCount0 < aqeOffBar &&
-      !sys.env.contains("SPARK_GRAFT_LOOP_NARROW_OFF")
-    def hinted(df: DataFrame): DataFrame =
-      if (smallLoop) df.hint("shuffle_hash") else df
+    val contractMin = graft.Sessions.knob(spark, graft.Sessions.CcContractMinEdges)
     var iter = 0
     var edgeCount: Long = edgeCount0
     val edgeCounts = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -716,25 +688,18 @@ object Dedup {
     val frozenParts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val frozenCounts = scala.collection.mutable.ArrayBuffer.empty[Long]
     val frozenRoller = new graft.Caches.CheckpointRoller(pairs.sparkSession)
-    // Loop shuffles are sized by the LOOP frames, not the input: at the
-    // input-sized AQE ceiling every round paid per-partition overhead
-    // across 3-4 exchanges (q62 at sf10: 39.8 s → 8.7 s under the
-    // loop-sized ceiling — the round cost was partition count, not
-    // rows; see Sessions.withLoopPartitions). The labels init and the
-    // first fixpoint sum are loop-frame stages too, so they sit inside.
-    graft.Sessions.withLoopPartitions(pairs.sparkSession,
-        math.max(1L, edgeCount0), narrow = smallLoop) {
-    var curEdges =
-      if (smallLoop) {
-        // loop-layout edges: one deterministic hash(src) relayout at
-        // the loop width — every round's propagate join then streams
-        // the cached layout with no per-round edge exchange
-        val relaid = edgeRoller.roll(edges0.repartition(
-          graft.Sessions.loopShufflePartitions(spark, edgeCount0), col("src")))
-        edgeRoller.advance()
-        edges0.unpersist()
-        relaid
-      } else edges0
+    // The loop regime (loop-sized partitions; below the narrow bar AQE
+    // off, hinted joins and hash(src)-relaid edges) is picked once from
+    // the edge count (Sessions.withLoop). The labels init and the first
+    // fixpoint sum are loop-frame stages too, so they sit inside.
+    graft.Sessions.withLoop(spark, edgeCount0) { loop =>
+    import loop.hinted
+    var curEdges = loop.relaid(edges0, "src") { r =>
+      val relaid = edgeRoller.roll(r)
+      edgeRoller.advance()
+      edges0.unpersist()
+      relaid
+    }
     // FUSED first round: propagating from the identity labeling needs
     // no label frame at all — min(self, min(neighbors)) is ONE
     // aggregation over the edge frame (the separate labels-init
@@ -832,7 +797,7 @@ object Dedup {
       }
     }
     if (curEdges eq edges0) edges0.unpersist()
-    // the final edge checkpoint (small-loop relayout or last
+    // the final edge checkpoint (narrow-loop relayout or last
     // contraction) is dead once the loop converges — the label frames
     // are materialized checkpoints; two advances release every
     // generation the edge roller still holds (CacheHygieneSpec: live
@@ -895,7 +860,7 @@ object Dedup {
             s"fixpoint in $maxIter pointer-jump rounds")
       all.select(col("id"), col("label").as("component"))
     }
-    } // withLoopPartitions
+    } // withLoop
   }
 
   /**
@@ -1138,6 +1103,14 @@ object Dedup {
    * unpersisted frame would re-scan `records` once per survivorship
    * column. Null values never win an election (a column's mode is over
    * its non-null members; an all-null column yields NULL).
+   *
+   * Contract: `labels` is RECORD-BOUNDED — at most one row per id of
+   * `records`, as [[dedupClusters]] yields over pairs drawn from these
+   * records' ids. Below [[RangeRank.manyLeafRows]]' bar on `records`
+   * the labels side is force-broadcast on the strength of this contract
+   * alone (its own size is not estimated): a labels frame from an
+   * unrelated or larger graph is broadcast unconditionally and can
+   * exhaust the driver's memory.
    */
   def goldenRecord(
       records: DataFrame, labels: DataFrame, id: String,

@@ -37,8 +37,8 @@ import org.apache.spark.sql.functions._
  * 100 TB everything takes the bucketed path. When the probed key
  * cardinality already exceeds the wanted parallelism the bucket count
  * collapses to 1 and the window path is kept too (a high-cardinality
- * window is already parallel). `SPARK_GRAFT_RANK_RANGE_BYTES` /
- * conf `graft.rank.rangeBytes` override for tests and A/B runs.
+ * window is already parallel). The conf `graft.rank.rangeBytes`
+ * overrides for tests and A/B runs.
  *
  * Determinism contract: `__grn` (the global per-key row number) is
  * deterministic when (value, tieBreak) is total per key; under ties it
@@ -60,28 +60,8 @@ object RangeRank {
       peerMaxAs: Option[String] = None,
       denseAs: Option[String] = None)
 
-  private val ThresholdConf = "graft.rank.rangeBytes"
-  private val RowsConf = "graft.rank.rangeRows"
-  private val MaxBucketsConf = "graft.rank.maxBuckets"
-  private val DefaultThreshold: Long = 256L << 20
-  // Half the byte gate's implied cutover at a typical ~64 B row width
-  // (256 MiB / 64 B = 4 M): estRows under-counts actual rows by the
-  // scan's compression ratio (measured 3-4x on snappy parquet — sf10
-  // events estimate 2.46 M for 10 M actual rows), so the nominal
-  // threshold sits lower to fire at the intended ~8 M true rows. At
-  // sf1 the largest narrow-frame estimate is 1.84 M (under), at sf0.1
-  // 0.19 M — bench-scale plans are untouched by the rows clause.
-  private val DefaultRowThreshold: Long = 2L << 20
-
-  private def thresholdBytes(df: DataFrame): Long =
-    df.sparkSession.conf.getOption(ThresholdConf)
-      .orElse(sys.env.get("SPARK_GRAFT_RANK_RANGE_BYTES"))
-      .flatMap(_.toLongOption).getOrElse(DefaultThreshold)
-
-  private def thresholdRows(df: DataFrame): Long =
-    df.sparkSession.conf.getOption(RowsConf)
-      .orElse(sys.env.get("SPARK_GRAFT_RANK_RANGE_ROWS"))
-      .flatMap(_.toLongOption).getOrElse(DefaultRowThreshold)
+  /** The bucket-count ceiling of the bucketed path. */
+  private val MaxBuckets = 1024
 
   /** Row estimate from the same Catalyst stats the byte gate reads:
    *  exact rowCount when the plan carries one, else a leaf-anchored
@@ -143,7 +123,8 @@ object RangeRank {
    *  above, not the rank path — fixed by groupQuantiles' shrink
    *  probe, not by suppressing the gate. */
   def useBucketed(df: DataFrame): Boolean =
-    df.queryExecution.optimizedPlan.stats.sizeInBytes >= BigInt(thresholdBytes(df)) ||
+    df.queryExecution.optimizedPlan.stats.sizeInBytes >=
+      BigInt(graft.Sessions.knob(df.sparkSession, graft.Sessions.RankRangeBytes)) ||
       manyLeafRows(df)
 
   /** The rows clause alone: does the honest (leaf-scan) row estimate
@@ -158,9 +139,18 @@ object RangeRank {
    *  windows), two median imputations through that path ran 23 jobs
    *  and 6.25 s of an 18.6 s pipeline (4-core box) before its one
    *  write started; Cleaning.imputeWithMedians now keys its exact path
-   *  on this clause instead. */
+   *  on this clause instead.
+   *
+   *  The default bar (`graft.rank.rangeRows`, 2 Mi rows) is half the
+   *  byte gate's implied cutover at a typical ~64 B row width
+   *  (256 MiB / 64 B = 4 M): estRows under-counts actual rows by the
+   *  scan's compression ratio (measured 3-4x on snappy parquet — sf10
+   *  events estimate 2.46 M for 10 M actual rows), so the nominal bar
+   *  sits lower to fire at the intended ~8 M true rows. At sf1 the
+   *  largest narrow-frame estimate is 1.84 M (under), at sf0.1 0.19 M —
+   *  bench-scale plans are untouched by the rows clause. */
   private[operators] def manyLeafRows(df: DataFrame): Boolean =
-    estRows(df) >= BigInt(thresholdRows(df))
+    estRows(df) >= BigInt(graft.Sessions.knob(df.sparkSession, graft.Sessions.RankRangeRows))
 
   /** The raw leaf-anchored row estimate, for consumers whose "big"
    *  bar sits elsewhere than the rank cutover (e.g. the SSJoin verify
@@ -184,10 +174,6 @@ object RangeRank {
     }
     walk(df.queryExecution.optimizedPlan)
   }
-
-  private def maxBuckets(df: DataFrame): Int =
-    df.sparkSession.conf.getOption(MaxBucketsConf)
-      .flatMap(_.toIntOption).getOrElse(1024)
 
   /**
    * ANSI NTILE recomposed from a global row number and the per-key row
@@ -251,7 +237,7 @@ object RangeRank {
     // once the keys alone are parallel enough.
     val spark = df.sparkSession
     val parallelism = spark.sessionState.conf.numShufflePartitions
-    val bMax = math.min(maxBuckets(df), math.max(parallelism * 8, 16))
+    val bMax = math.min(MaxBuckets, math.max(parallelism * 8, 16))
     val kExpr =
       if (keys.isEmpty) lit(1L)
       else approx_count_distinct(struct(keys.map(col): _*))

@@ -724,37 +724,22 @@ object Relational {
     def rankOf(sumCol: Column): Column =
       (lit(1.0d) - d) / gN +
         d * coalesce(sumCol.cast("string").cast("double"), lit(0.0d))
-    // EAGER iteration under the narrow loop regime (round-14, the CC
-    // recipe): the lazy `iterations`-deep plan paid AQE stage
-    // materialization + replanning per exchange per iteration plus a
-    // ~1.2 s deep-plan planning gap at the one action (profiled at
-    // sf0.1: 31 jobs for 5 iterations). Below
-    // `graft.pagerank.loopAqeOffEdges` normalized edges (default 32 M;
-    // same A/B escapes as CC's) each iteration is ONE statically
-    // planned checkpoint job; the norm frame is re-laid hash(src) at
-    // the loop width once so the per-iteration join streams it with no
-    // exchange, and the vertex-sized sums side carries an explicit
-    // SHUFFLE_HASH hint (checkpoint-scan stats are unknown to the
-    // static planner). Values are bit-identical: the checkpoint only
+    // EAGER iteration under the loop regime (Sessions.withLoop, picked
+    // from the normalized edge count): the lazy `iterations`-deep plan
+    // paid AQE stage materialization + replanning per exchange per
+    // iteration plus a ~1.2 s deep-plan planning gap at the one action
+    // (profiled at sf0.1: 31 jobs for 5 iterations). In the narrow
+    // regime each iteration is ONE statically planned checkpoint job;
+    // the norm frame is re-laid hash(src) once so the per-iteration join
+    // streams it with no exchange, and the vertex-sized sums side is the
+    // hinted build side. Values are bit-identical: the checkpoint only
     // materializes the same expression tree, and the per-target sums
     // are order-free DECIMAL(38,30) string images.
     val edgeRows = norm0.count()
-    val aqeOffBar: Long = spark.conf.getOption("graft.pagerank.loopAqeOffEdges")
-      .orElse(sys.env.get("SPARK_GRAFT_PAGERANK_LOOP_AQE_OFF_EDGES"))
-      .flatMap(_.toLongOption).getOrElse(32000000L)
-    val narrow = edgeRows < aqeOffBar &&
-      !sys.env.contains("SPARK_GRAFT_LOOP_NARROW_OFF")
-    def hinted(dfh: DataFrame): DataFrame =
-      if (narrow) dfh.hint("shuffle_hash") else dfh
-    graft.Sessions.withLoopPartitions(spark, math.max(1L, edgeRows), narrow) {
+    graft.Sessions.withLoop(spark, edgeRows) { loop =>
       val roller = new graft.Caches.CheckpointRoller(spark)
       val edgeRoller = new graft.Caches.CheckpointRoller(spark)
-      val norm =
-        if (narrow) {
-          val relaid = edgeRoller.roll(norm0.repartition(
-            graft.Sessions.loopShufflePartitions(spark, edgeRows), col(src)))
-          relaid
-        } else norm0
+      val norm = loop.relaid(norm0, src)(edgeRoller.roll)
       var sums: Option[DataFrame] = None
       (1 to iterations).foreach { _ =>
         val contrib = sums match {
@@ -764,7 +749,7 @@ object Relational {
                 col("__gW").cast("double"))
                 .cast("string").cast("decimal(38,30)").as("__gc"))
           case Some(s0) =>
-            norm.join(hinted(s0.select(col("__gdst").as("__gsrc"), col("__gs"))),
+            norm.join(loop.hinted(s0.select(col("__gdst").as("__gsrc"), col("__gs"))),
                 col(src) === col("__gsrc"), "left")
               .select(col(dst).as("__gdst"),
                 (rankOf(col("__gs")) * col(weight).cast("double") /
@@ -983,10 +968,8 @@ object Relational {
    * exclusive running count + 1 IS rank, and the inclusive running
    * count over the key total IS cume_dist), and map the ranks back
    * onto the fact rows by (keys, value) — broadcast when the probed
-   * distinct count × schema row width fits `graft.rank.broadcastBytes`
-   * (default 64 MB; a `graft.rank.broadcastVals` row bar overrides),
-   * else a hash join that still never sorts the fact side. Above
-   * the gate one bounded probe (the groupQuantiles shrink probe)
+   * distinct count × schema row width fits 64 MiB, else a hash join
+   * that still never sorts the fact side. Above the gate one bounded probe (the groupQuantiles shrink probe)
    * routes: shrink ≥ 2 takes the value-aggregated path (q166's sf10
    * prices shrink 101×: 60 M rows → 594 k distinct, turning a 60 M-row
    * exchange+sort into scan + tiny rank + broadcast join), near-unique
@@ -1054,23 +1037,13 @@ object Relational {
       // still never sorts. The gate is BYTE-aware: the probe is an
       // HLL++ estimate (±~2-4% at default rsd), so it is inflated by
       // that margin and multiplied by the schema's default per-row
-      // width against `graft.rank.broadcastBytes` (default 64 MB) — a
-      // row-count bar alone would let a near-bar under-estimate
-      // broadcast a wide multi-key frame measured in hundreds of MB.
-      // An explicitly-set `graft.rank.broadcastVals` row bar overrides
-      // (the measured-tuning escape hatch).
-      val rowBar = fact.sparkSession.conf
-        .getOption("graft.rank.broadcastVals").flatMap(_.toLongOption)
-      val byteBar = fact.sparkSession.conf
-        .getOption("graft.rank.broadcastBytes").flatMap(_.toLongOption)
-        .getOrElse(64L << 20)
+      // width against a 64 MiB gate — a row-count bar alone would let a
+      // near-bar under-estimate broadcast a wide multi-key frame
+      // measured in hundreds of MB.
       val rowBytes = math.max(1L,
         vals.schema.fields.map(_.dataType.defaultSize.toLong).sum)
       val fits = shrinkProbe.exists { case (d, _) =>
-        rowBar match {
-          case Some(b) => d <= b
-          case None => (d * 104L) / 100L * rowBytes <= byteBar
-        }
+        (d * 104L) / 100L * rowBytes <= (64L << 20)
       }
       val rhs = if (fits) broadcast(vals) else vals.hint("shuffle_hash")
       // null-safe map-back: a null key or value groups as its own peer

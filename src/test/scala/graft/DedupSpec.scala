@@ -236,6 +236,14 @@ class DedupSpec extends SparkSpec {
     val got = Dedup.connectedComponents(edges.toDF("id_a", "id_b"))
       .as[(Long, Long)].collect().toMap
     assert(got == unionFind(edges))
+    // the same input through the wide loop regime (a zero narrow bar:
+    // AQE on, no relayout, no hints) yields the same labels
+    spark.conf.set("graft.loop.narrowRows", "0")
+    val wide =
+      try Dedup.connectedComponents(edges.toDF("id_a", "id_b"))
+        .as[(Long, Long)].collect().toMap
+      finally spark.conf.unset("graft.loop.narrowRows")
+    assert(wide == got)
   }
 
   test("connectedComponents contracts the edge set: counts shrink to zero at fixpoint") {

@@ -510,6 +510,16 @@ class RelationalSpec extends SparkSpec {
       ra = floor; rb = nb
     }
     assert(got("a") == ra && got("b") == rb)
+    // the wide loop regime (a zero narrow bar: AQE on, no relayout, no
+    // hints) yields bit-identical ranks on both inputs
+    spark.conf.set("graft.loop.narrowRows", "0")
+    val (wideCycle, wideChain) =
+      try (Relational.pageRank(cycle.repartition(2), "s", "d", "w", iterations = 5, damping = 0.85)
+          .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap,
+        Relational.pageRank(chain, "s", "d", "w", iterations = 3, damping = 0.85)
+          .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap)
+      finally spark.conf.unset("graft.loop.narrowRows")
+    assert(wideCycle == out && wideChain == got)
     val ex = intercept[IllegalArgumentException] {
       Relational.pageRank(chain, "s", "d", "w", iterations = 0, damping = 0.85)
     }
